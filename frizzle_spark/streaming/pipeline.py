@@ -22,10 +22,13 @@ drains in-flight work.  Spark mapping (SURVEY.md §3.2):
                         FlushAndClose → user callback (options.go:105-135)
 
 Scale: the envelope never collects to the driver; routing is a column
-predicate, both sink writes are executor-parallel, and the only
-per-batch driver work is the commit.  Rate limiting (reference's
-buffer-500 backpressure, basic/source.go:13-16) maps to
-``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger`` on the source.
+predicate, and the only per-batch driver work is the commit.  A batch
+runs one Spark job per sink — main sink and DLQ — and the two run at
+the same time, so a batch's latency is the slower write rather than
+their sum.  With a fail sink configured the DLQ job is launched on
+every batch, as an empty job when the batch has no failures.  Rate
+limiting (reference's buffer-500 backpressure, basic/source.go:13-16)
+maps to ``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger`` on the source.
 """
 
 from __future__ import annotations
@@ -39,6 +42,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -445,12 +449,12 @@ class ParquetSink:
         self, df: DataFrame, default_dest: str, batch_id: int | None = None
     ) -> None:
         dest_col = F.coalesce(F.col("dest"), F.lit(default_dest))
-        out = df.withColumn("dest", dest_col)
         if batch_id is None:
+            out = df.withColumn("dest", dest_col)
             out.write.mode("append").partitionBy("dest").parquet(self.base_path)
             return
         (
-            out.withColumn("_batch", F.lit(int(batch_id)))
+            df.withColumns({"dest": dest_col, "_batch": F.lit(int(batch_id))})
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("dest", "_batch")
@@ -837,6 +841,25 @@ class KinesisSink:
 
 
 # --------------------------------------------------------------- pipeline
+class _SparkThread(InheritableThread):
+    """Runs ``fn(*args, **kwargs)`` on its own thread.  ``InheritableThread``
+    copies the caller's Spark local properties, so a job started here
+    keeps the query's job group and ``query.stop()`` cancels it like the
+    batch thread's own jobs.  An exception is kept in ``error`` for the
+    caller to raise after ``join()``."""
+
+    def __init__(self, fn: Callable[..., None], *args: Any, **kwargs: Any) -> None:
+        self.error: BaseException | None = None
+
+        def run() -> None:
+            try:
+                fn(*args, **kwargs)
+            except BaseException as exc:  # re-raised by the joining caller
+                self.error = exc
+
+        super().__init__(run, daemon=True)
+
+
 class Pipeline:
     """``Init(source, sink, opts...)`` equivalent (frizzle.go:53-79).
 
@@ -884,10 +907,61 @@ class Pipeline:
         self.drop_unrouted = drop_unrouted
         self.checkpoint_dir = checkpoint_dir or scratch_ckpt_dir("frizzle-ckpt-")
         self.query: StreamingQuery | None = None
+        self._drains_itself = True  # availableNow/once end on their own
         self.listener: M.PipelineListener | None = None
         if monitor_rate:
             self.listener = M.PipelineListener(self.stats)
             spark.streams.addListener(self.listener)
+
+        # The routing columns are built once here; a batch only attaches
+        # them to its DataFrame.
+        # NULL-normalize the fail predicate: a predicate over a nullable
+        # column evaluates NULL on some rows, and both filter(p) and
+        # filter(~p) drop NULL — the row would silently land in neither
+        # the sink nor the DLQ.  NULL ≙ not failed, so the {sink, DLQ}
+        # partition invariant (common/unacked.go contract) holds for
+        # every row.
+        self._pred = (
+            F.coalesce(fail_predicate.cast("boolean"), F.lit(False))
+            if fail_predicate is not None
+            else F.lit(False)
+        )
+        self._ok = ~self._pred
+        # Guard: when the main sink and the DLQ share one ParquetSink
+        # base, an ok-row routed to dest == dlq_dest lands in the same
+        # (dest, _batch) partition the DLQ's dynamic overwrite replaces,
+        # and one write silently deletes the other's rows.  Count such
+        # collisions and fail the batch instead of losing rows.
+        dlq_dest = fail_sink[1] if fail_sink is not None else None
+        self._dlq_shares_storage = (
+            fail_sink is not None
+            and isinstance(sink, ParquetSink)
+            and isinstance(fail_sink[0], ParquetSink)
+            and fail_sink[0].base_path == sink.base_path
+        )
+        collide = (
+            F.count(
+                F.when(
+                    self._ok
+                    & (F.coalesce(F.col("dest"), F.lit(default_dest)) == F.lit(dlq_dest)),
+                    True,
+                )
+            )
+            if self._dlq_shares_storage
+            else F.count(F.lit(None))
+        )
+        # rcv/fail/unrouted counters ride the sink jobs via a
+        # CollectMetrics (observe) node placed BELOW the routing filters
+        # (SURVEY §2.1/O19's df.observe mapping; round 1 ran a separate
+        # aggregate job per trigger instead), so zero extra jobs per batch.
+        self._observed = [
+            F.count(F.lit(1)).alias("rcv"),
+            F.count(F.when(self._pred, True)).alias("fail"),
+            F.count(F.when(self._ok & F.col("dest").isNull(), True)).alias("unrouted"),
+            collide.alias("collide"),
+        ]
+        self._routed = F.col("dest").isNotNull()
+        self._dlq_dest = F.lit(dlq_dest)
 
     # ≙ Receive() (frizzle.go:110-112): the post-receive-transform stream
     def stream(self) -> DataFrame:
@@ -897,79 +971,47 @@ class Pipeline:
     def _run_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # One micro-batch ≙ one slice of the consume loop.  Checkpoint
         # commit after this returns ≙ Ack for every routed row.
+        # The persist keeps the two sink jobs from reading the source
+        # twice (a network source such as Kafka would re-fetch).
         batch_df = batch_df.persist()
         try:
             df = self.process(batch_df) if self.process else batch_df
-            # NULL-normalize the fail predicate ONCE: a predicate over a
-            # nullable column evaluates NULL on some rows, and both
-            # filter(p) and filter(~p) drop NULL — the row would silently
-            # land in neither the sink nor the DLQ.  NULL ≙ not failed,
-            # so the {sink, DLQ} partition invariant (common/unacked.go
-            # contract) holds for every row.
-            has_fail = self.fail_predicate is not None
-            pred = (
-                F.coalesce(self.fail_predicate.cast("boolean"), F.lit(False))
-                if has_fail
-                else F.lit(False)
-            )
-
-            # Zero extra jobs per batch: rcv/fail/unrouted counters ride
-            # the sink write via a CollectMetrics (observe) node placed
-            # BELOW the routing filters, so the full batch flows through
-            # it during the main sink's action (SURVEY §2.1/O19's
-            # df.observe mapping; round 1 ran a separate aggregate job
-            # per trigger instead).
-            # Guard (rides the same observe — zero extra jobs): when the
-            # main sink and the DLQ share one ParquetSink base, an
-            # ok-row routed to dest == dlq_dest would land via the main
-            # write and then be silently DELETED by the DLQ's dynamic
-            # overwrite of that same (dest, _batch) partition.  Count
-            # such collisions and fail the batch instead of losing rows.
-            dlq_dest = self.fail_sink[1] if self.fail_sink is not None else None
-            dlq_shares_storage = (
-                self.fail_sink is not None
-                and isinstance(self.sink, ParquetSink)
-                and isinstance(self.fail_sink[0], ParquetSink)
-                and self.fail_sink[0].base_path == self.sink.base_path
-            )
-            collide = (
-                F.count(
-                    F.when(
-                        ~pred
-                        & (
-                            F.coalesce(F.col("dest"), F.lit(self.default_dest))
-                            == F.lit(dlq_dest)
-                        ),
-                        True,
-                    )
-                )
-                if dlq_shares_storage
-                else F.count(F.lit(None))
-            )
             obs = Observation(f"frizzle-batch-{batch_id}")
-            df = df.observe(
-                obs,
-                F.count(F.lit(1)).alias("rcv"),
-                F.count(F.when(pred, True)).alias("fail"),
-                F.count(F.when(~pred & F.col("dest").isNull(), True)).alias(
-                    "unrouted"
-                ),
-                collide.alias("collide"),
-            )
-            failed = df.filter(pred) if has_fail else None
-            ok = df.filter(~pred) if has_fail else df
-
-            to_send = ok.where(F.col("dest").isNotNull()) if self.drop_unrouted else ok
+            # the observe node sits below both routing filters, so
+            # whichever sink job finishes first reports the full batch
+            df = df.observe(obs, *self._observed)
+            has_fail = self.fail_predicate is not None
+            ok = df.filter(self._ok) if has_fail else df
+            to_send = ok.where(self._routed) if self.drop_unrouted else ok
             to_send = chain([t.send for t in self.transformers], to_send)
-            self.sink.write(to_send, self.default_dest, batch_id=batch_id)
 
-            counts = obs.get  # resolved by the sink job just finished
-            if dlq_shares_storage and counts["collide"]:
+            # One job per sink, overlapped: the DLQ write runs on its own
+            # thread while the main write runs on this one.  A batch with
+            # no failures still launches the DLQ job; it writes nothing
+            # and costs no latency because it overlaps the main write.
+            dlq_job = None
+            if has_fail and self.fail_sink is not None:
+                dlq, dlq_dest = self.fail_sink
+                failed = df.filter(self._pred).withColumn("dest", self._dlq_dest)
+                dlq_job = _SparkThread(dlq.write, failed, dlq_dest, batch_id=batch_id)
+                dlq_job.start()
+            try:
+                self.sink.write(to_send, self.default_dest, batch_id=batch_id)
+            finally:
+                # never leave a write running past the batch, even when
+                # the main write raised; its error then wins
+                if dlq_job is not None:
+                    dlq_job.join()
+            if dlq_job is not None and dlq_job.error is not None:
+                raise dlq_job.error
+
+            counts = obs.get  # resolved by the first sink job to finish
+            if self._dlq_shares_storage and counts["collide"]:
                 raise ValueError(
                     f"batch {batch_id}: {counts['collide']} ok-row(s) routed to "
-                    f"dest={dlq_dest!r}, which is also the DLQ destination on the "
-                    "SAME ParquetSink base — the DLQ's partition overwrite would "
-                    "silently delete them.  Use a distinct DLQ base_path or dest."
+                    f"dest={self.fail_sink[1]!r}, which is also the DLQ destination "
+                    "on the SAME ParquetSink base — the DLQ's partition overwrite "
+                    "would silently delete them.  Use a distinct DLQ base_path or dest."
                 )
             n_rcv, n_fail = counts["rcv"], counts["fail"]
             n_ok = n_rcv - n_fail
@@ -977,16 +1019,9 @@ class Pipeline:
             self.stats.increment(M.RCV, n_rcv)
             self.stats.increment(M.SEND, n_send)
             self.stats.increment(M.ACK, n_ok)
-
-            if failed is not None and n_fail:
+            if n_fail:
                 self.stats.increment(M.FAIL, n_fail)
-                if self.fail_sink is not None:
-                    dlq, dlq_dest = self.fail_sink
-                    dlq.write(
-                        failed.withColumn("dest", F.lit(dlq_dest)),
-                        dlq_dest,
-                        batch_id=batch_id,
-                    )
+                if dlq_job is not None:
                     self.stats.increment(M.FAILSEND, n_fail)
         finally:
             batch_df.unpersist()
@@ -997,15 +1032,15 @@ class Pipeline:
         trigger: dict[str, Any] | None = None,
         query_name: str | None = None,
     ) -> StreamingQuery:
-        out = chain([t.receive for t in self.transformers], self.source.load(self.spark))
         writer = (
-            out.writeStream.foreachBatch(self._run_batch)
+            self.stream()
+            .writeStream.foreachBatch(self._run_batch)
             .option("checkpointLocation", self.checkpoint_dir)
             .queryName(query_name or f"frizzle-{uuid.uuid4().hex[:8]}")
         )
         trigger = trigger or {"availableNow": True}
-        writer = writer.trigger(**trigger)
-        self.query = writer.start()
+        self._drains_itself = bool({"availableNow", "once"} & trigger.keys())
+        self.query = writer.trigger(**trigger).start()
         return self.query
 
     # ≙ FlushAndClose (frizzle.go:152-179): drain, then stop.
@@ -1021,12 +1056,28 @@ class Pipeline:
         if self.query is None:
             return
         try:
-            self.query.awaitTermination(flush_timeout)
+            if self._drains_itself:
+                self.query.awaitTermination(flush_timeout)
+            else:
+                self._await_drained(flush_timeout)
         finally:
             if self.query.isActive:
                 self.query.stop()
             if self.listener is not None:
                 self.spark.streams.removeListener(self.listener)
+
+    def _await_drained(self, timeout: float) -> None:
+        """Wait until a live query (processingTime/continuous trigger,
+        which never ends by itself) has committed its in-flight batch and
+        a trigger has found no input waiting, or until ``timeout``.
+        ``processAllAvailable`` is exactly that wait but has no bound, so
+        it runs on a helper thread; the ``query.stop()`` that follows
+        releases it.  A query that died raises its error here."""
+        drain = _SparkThread(self.query.processAllAvailable)
+        drain.start()
+        drain.join(timeout)
+        if drain.error is not None:
+            raise drain.error
 
     # ≙ HandleShutdown (options.go:105-135)
     def handle_shutdown(

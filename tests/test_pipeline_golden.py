@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -237,6 +238,29 @@ def test_handle_shutdown_real_signal(spark, corpus_dir):
             pipe.query.stop()
 
 
+def test_stop_live_bus_returns_once_drained(spark, corpus_dir):
+    """FlushAndClose on a processingTime bus, whose query never ends by
+    itself: stop() first delivers what is waiting, then returns as soon
+    as a trigger finds no new input instead of sitting out the whole
+    flush timeout."""
+    stats = M.DictStats()
+    pipe, main, dlq = _build(spark, corpus_dir, stats)
+    pipe.start(trigger={"processingTime": "0 seconds"})
+    pipe.stop(flush_timeout=120)  # drains the waiting corpus first
+    assert not pipe.query.isActive
+    assert sorted(r["id"] for r in main.sent["all-lower"]) == ["foo", "frizzle"]
+    assert [r["id"] for r in dlq.sent["fail"]] == ["fail"]
+    assert stats.counts[M.RCV] == 5
+
+    pipe, _, _ = _build(spark, corpus_dir, M.DictStats())
+    pipe.start(trigger={"processingTime": "0 seconds"})
+    pipe.query.processAllAvailable()
+    t0 = time.monotonic()
+    pipe.stop(flush_timeout=30)
+    assert time.monotonic() - t0 < 5, "stop() waited out the flush timeout"
+    assert not pipe.query.isActive
+
+
 def test_null_fail_predicate_rows_route_to_sink(spark):
     """A fail predicate that evaluates NULL (nullable column) must NOT
     drop the row from both sides: NULL ≙ not-failed, so the row lands in
@@ -265,9 +289,11 @@ def test_null_fail_predicate_rows_route_to_sink(spark):
 
 
 def test_counters_ride_sink_job(spark):
-    """O19 via observe(): one batch with failures runs exactly two jobs
-    (main sink + DLQ) — the rcv/fail/unrouted counters ride the sink job
-    through a CollectMetrics node instead of a separate aggregate job."""
+    """O19 via observe(): a batch runs exactly two jobs (main sink + DLQ)
+    — the rcv/fail/unrouted counters ride the sink jobs through a
+    CollectMetrics node instead of a separate aggregate job.  A batch
+    with no failures still runs the DLQ job, empty and overlapped with
+    the main write."""
     sc = spark.sparkContext
     stats = M.DictStats()
     main, dlq = MemorySink(), MemorySink()
@@ -291,6 +317,79 @@ def test_counters_ride_sink_job(spark):
     jobs = sc.statusTracker().getJobIdsForGroup("probe-batch-jobs")
     assert len(jobs) == 2, f"expected sink+DLQ jobs only, got {len(jobs)}"
     assert stats.counts[M.RCV] == 2 and stats.counts[M.FAIL] == 1
+
+    sc.setJobGroup("probe-zero-failure-jobs", "job-count gate")
+    try:
+        pipe._run_batch(df.where(F.col("id") != "fail"), 1)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("probe-zero-failure-jobs")
+    assert len(jobs) == 2, f"expected sink + empty DLQ job, got {len(jobs)}"
+    assert len(main.sent["out"]) == 2 and len(dlq.sent["dead"]) == 1
+    assert stats.counts[M.RCV] == 3 and stats.counts[M.FAILSEND] == 1
+
+
+class _ScriptedSink(MemorySink):
+    """MemorySink whose write first sleeps ``delay_s``, then raises
+    ``error`` or writes; ``span`` records when the write ran."""
+
+    def __init__(self, delay_s: float = 0.0, error: Exception | None = None) -> None:
+        super().__init__()
+        self.delay_s = delay_s
+        self.error = error
+        self.span: tuple[float, float] | None = None
+
+    def write(self, df, default_dest, batch_id=None):
+        t0 = time.monotonic()
+        try:
+            time.sleep(self.delay_s)
+            if self.error is not None:
+                raise self.error
+            super().write(df, default_dest, batch_id)
+        finally:
+            self.span = (t0, time.monotonic())
+
+
+@pytest.mark.parametrize("failing", ["main", "dlq"])
+def test_failed_sink_write_fails_batch_after_both_writes(spark, failing):
+    """The main and DLQ writes of a batch overlap.  When one of them
+    raises, the batch fails with that error only after the other write
+    has returned: no job of the batch is left running, and no counter
+    moves, because the batch is not acked."""
+    sc = spark.sparkContext
+    boom = RuntimeError(f"{failing} write failed")
+    slow, broken = _ScriptedSink(delay_s=1.5), _ScriptedSink(error=boom)
+    main, dlq = (broken, slow) if failing == "main" else (slow, broken)
+    stats = M.DictStats()
+    pipe = Pipeline(
+        spark,
+        source=None,
+        sink=main,
+        default_dest="out",
+        fail_sink=(dlq, "dead"),
+        fail_predicate=F.col("id") == "fail",
+        stats=stats,
+    )
+    df = spark.createDataFrame(
+        [("a", b"x", None, "out"), ("fail", b"z", None, "out")], MSG_SCHEMA
+    )
+    group = f"probe-failed-{failing}-write"
+    sc.setJobGroup(group, "overlapped write failure")
+    try:
+        with pytest.raises(RuntimeError) as err:
+            pipe._run_batch(df, 0)
+        raised_at = time.monotonic()
+    finally:
+        sc.setJobGroup(None, None)
+    assert err.value is boom
+    # the healthy write ran to completion before the batch failed
+    assert slow.span is not None and slow.span[1] <= raised_at
+    assert sum(len(rows) for rows in slow.sent.values()) == 1
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1  # the healthy sink's collect
+    assert all(tracker.getJobInfo(j).status != "RUNNING" for j in jobs)
+    assert dict(stats.counts) == {}
 
 
 def test_kafka_source_envelope_and_options(spark):
@@ -393,7 +492,8 @@ def test_parquet_sink_idempotent_on_batch_retry(spark, tmp_path):
     """A replayed micro-batch (same batch_id — checkpoint uncommitted,
     foreachBatch re-invoked) must NOT duplicate sink rows: ParquetSink's
     dynamic partition overwrite rewrites its own dest/_batch partitions.
-    A NEW batch id still appends."""
+    A NEW batch id still appends.  Main sink and DLQ share the base and
+    write each batch at the same time; no staging directory is left."""
     from frizzle_spark.streaming.pipeline import ParquetSink
 
     base = str(tmp_path / "sink")
@@ -418,7 +518,11 @@ def test_parquet_sink_idempotent_on_batch_retry(spark, tmp_path):
 
     df2 = spark.createDataFrame([("c", b"w", None, None)], MSG_SCHEMA)
     pipe._run_batch(df2, 8)  # a NEW batch appends
-    assert spark.read.parquet(base).count() == 4
+    pipe._run_batch(df.repartition(3), 7)  # a multi-task replay
+    got = sorted((r["id"], r["dest"]) for r in spark.read.parquet(base).collect())
+    assert got == [("a", "main"), ("b", "main"), ("c", "main"), ("fail", "dead")]
+    staging = [d for _, dirs, _ in os.walk(base) for d in dirs if d.startswith(".spark-staging-")]
+    assert staging == []
 
 
 def _batch_sink(spark, tmp_path, n_batches=5):
